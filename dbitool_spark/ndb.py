@@ -7,12 +7,17 @@ order), the table replays as a source in unordered key order, and the
 TODO (:61-72) earmarks it as the lookup/join side. The Spark-native
 realization is a parquet-backed keyed table:
 
-- `upsert(df)` resolves the new batch against the stored state with
-  one key-partitioned window (max generation wins; within a batch an
-  explicit `order_by` — or deterministic struct-max — breaks ties,
-  since DataFrames have no stream order to inherit);
+- `upsert(df)` resolves the new batch against the stored state in ONE
+  shuffle: the state+batch union is repartitioned by key bucket and
+  resolved by a window over (bucket, key) that partitioning already
+  satisfies (max generation wins; within a batch an explicit
+  `order_by` — or deterministic struct-max — breaks ties, since
+  DataFrames have no stream order to inherit); `merge_upsert` folds
+  its combine rules through the same single exchange as one
+  aggregation;
 - `replay()` is a parquet scan (schema stored in the footer — the
-  reference's `_col` entry for free);
+  reference's `_col` entry for free — and recorded per version in
+  `_schema.json`, so reads skip Spark's schema-inference job);
 - `lookup(other, ...)` joins the table into a stream; small tables
   broadcast, large ones shuffle on the key.
 
@@ -64,8 +69,10 @@ import json
 import os
 import shutil
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 from pyspark.sql.window import Window
 
 _GEN = "__ndb_gen"
@@ -89,6 +96,41 @@ _COMMITTED = "_committed"
 # one small JSON read. Optional everywhere: pre-manifest versions
 # (and non-JSON-serializable key types) fall back to footer probes.
 _MANIFEST = "_manifest.json"
+# the version's Spark read schema (StructType JSON, as
+# spark.read.parquet(v{gen}).schema would infer it), staged beside the
+# manifest so the commit rename publishes it atomically. Reads pass it
+# to .schema(...) and skip Spark's schema-inference job (one footer-
+# reading Spark job per read). Absent on pre-record versions, on
+# versions whose carried files might disagree with the written schema,
+# and on evolved tables (mixed-schema files need mergeSchema) —
+# readers then infer as before.
+_SCHEMA = "_schema.json"
+
+
+def _nullable_type(t):
+    """Spark's DataType.asNullable on a type's JSON form — file reads
+    mark every field, element and map value nullable, so the recorded
+    schema must too to equal what inference returns."""
+    if isinstance(t, dict):
+        kind = t.get("type")
+        if kind == "struct":
+            return {
+                **t,
+                "fields": [
+                    {**f, "type": _nullable_type(f["type"]), "nullable": True}
+                    for f in t["fields"]
+                ],
+            }
+        if kind == "array":
+            return {**t, "elementType": _nullable_type(t["elementType"]), "containsNull": True}
+        if kind == "map":
+            return {
+                **t,
+                "keyType": _nullable_type(t["keyType"]),
+                "valueType": _nullable_type(t["valueType"]),
+                "valueContainsNull": True,
+            }
+    return t
 
 
 class NdbWriteConflict(RuntimeError):
@@ -532,6 +574,10 @@ class NdbTable:
         #: last_prune_stats; review finding: reading it pre-lookup
         #: raised AttributeError)
         self.last_lookup_stats: dict = {}
+        # the last pruned lookup()'s probe, persisted so the prune pass
+        # and the returned join evaluate it once; released by the next
+        # lookup or write, so at most one is ever held
+        self._held_probe: DataFrame | None = None
         os.makedirs(path, exist_ok=True)
         # the stored layout is authoritative: a reopened table keeps
         # the bucket count it was written with (the constructor arg is
@@ -829,11 +875,47 @@ class NdbTable:
         r = self.spark.read
         return r.option("mergeSchema", "true") if self._evolved else r
 
+    def _load_schema(self, version_dir: str | None) -> dict | None:
+        """The version's recorded read schema (JSON form), or None."""
+        if version_dir is None:
+            return None
+        try:
+            with open(os.path.join(version_dir, _SCHEMA)) as fh:
+                return json.load(fh)
+        except (OSError, ValueError):
+            return None
+
+    @staticmethod
+    def _write_schema(out_dir: str, schema: dict | None) -> None:
+        """Stage the version's schema record (None: no record). The
+        unlink breaks a hardlink the legacy whole-dir carry may have
+        made to the previous version's record."""
+        tgt = os.path.join(out_dir, _SCHEMA)
+        try:
+            os.unlink(tgt)
+        except FileNotFoundError:
+            pass
+        if schema is not None:
+            with open(tgt, "w") as fh:
+                json.dump(schema, fh)
+
+    def _read_version(self, version_dir: str, files: list[str] | None = None) -> DataFrame:
+        """Read a version dir (or the listed files of it) with its
+        recorded schema, skipping inference; evolved tables and
+        versions without a record infer through _reader()."""
+        r = self._reader()
+        schema = None if self._evolved else self._load_schema(version_dir)
+        if schema is not None:
+            r = r.schema(StructType.fromJson(schema))
+        if files is None:
+            return r.parquet(version_dir)
+        return r.option("basePath", version_dir).parquet(*files)
+
     def _state(self) -> DataFrame | None:
         current = self._current_dir()
         if current is None:
             return None
-        return self._reader().parquet(current)
+        return self._read_version(current)
 
     def _bucket_expr(self):
         return F.pmod(F.xxhash64(F.col(self.key)), F.lit(self.n_buckets)).cast("int")
@@ -890,7 +972,12 @@ class NdbTable:
             st = md.row_group(g).column(idx).statistics
             if st is None or not st.has_min_max:
                 return None, rows
-            gmin, gmax = st.min, st.max
+            try:
+                gmin, gmax = st.min, st.max
+            except NotImplementedError:
+                # pyarrow cannot convert some logical types' stats
+                # (e.g. a decimal stored as INT64): no usable range
+                return None, rows
             if isinstance(gmin, bytes):
                 gmin = gmin.decode("utf-8", "replace")
             if isinstance(gmax, bytes):
@@ -985,19 +1072,19 @@ class NdbTable:
             fh.write(payload)
 
     def _split_touched_files(
-        self, batch: DataFrame, current: str,
-        bucket_dirs: dict[int, str], touched: list[int],
-        rng: dict | None = None,
+        self, current: str, bucket_dirs: dict[int, str],
+        touched: list[int], rng: dict,
     ) -> tuple[list[str], list[str]]:
         """Intra-bucket pruning (files_per_bucket > 1): partition the
         touched buckets' data files into (read_files, carry_files) by
         intersecting each file's footer key range with the batch's
-        per-bucket key range. A carry file's range is DISJOINT from
-        the batch's [min, max], so it cannot hold any batch key — it
-        hardlinks forward untouched and per-key uniqueness survives.
-        Range-vs-range (not range-vs-key-set) keeps the driver edge
-        bounded: one n_buckets-row aggregate plus one footer per
-        touched-bucket file.
+        per-bucket key range `rng` ({bucket: (lo, hi)}, from the
+        batch probe; empty when the key type is not range-safe). A
+        carry file's range is DISJOINT from the batch's [min, max], so
+        it cannot hold any batch key — it hardlinks forward untouched
+        and per-key uniqueness survives. Range-vs-range (not range-vs-
+        key-set) keeps the driver edge bounded: one n_buckets-row
+        aggregate plus one footer per touched-bucket file.
 
         Domain gate (review finding): footer statistics live in
         pyarrow's value domain — bytes decode to str, timestamps come
@@ -1008,18 +1095,6 @@ class NdbTable:
         else (binary, timestamps) reads every touched-bucket file —
         the safe over-read, never a TypeError or a tz-offset
         mis-carry that would duplicate keys."""
-        if rng is None and self._range_safe_key_type():
-            # fallback probe for callers that did not pre-collect the
-            # ranges in their touched-set job (r17: upsert normally
-            # passes rng — this job only runs on the _touched path)
-            rng = {
-                r[0]: (r[1], r[2])
-                for r in batch.groupBy(_BUCKET)
-                .agg(F.min(self.key).alias("lo"), F.max(self.key).alias("hi"))
-                .collect()
-            }
-        elif rng is None:
-            rng = {}  # lo=None per bucket -> every file reads
         manifest = self._load_manifest(current)
         read: list[str] = []
         carry: list[str] = []
@@ -1052,7 +1127,6 @@ class NdbTable:
         *,
         order_by: str | list[str] | None = None,
         prune: bool = True,
-        _touched: list[int] | None = None,
     ) -> None:
         """Merge a batch: per key, the newest generation wins; within
         this batch, `order_by` desc wins (defaults to a deterministic
@@ -1064,19 +1138,32 @@ class NdbTable:
         from the previous version (module docstring). The touched-
         bucket set is one bounded collect (n_buckets rows); on
         files_per_bucket>1 tables that same aggregation also carries
-        the per-bucket key ranges the intra-bucket file prune needs
-        (r17, verdict item 7 — previously a SECOND collect job inside
-        _split_touched_files). prune=False skips the probe job and
-        does the full merge-rewrite — measured ~0.2s/upsert cheaper
-        when the caller KNOWS its keys spread over every bucket
-        (uniform hash keys, e.g. an LSH index), where the prune job
-        can never pay for itself.
+        the per-bucket key ranges the intra-bucket file prune needs.
+        prune=False skips the probe job and does the full merge-
+        rewrite — measured ~0.2s/upsert cheaper when the caller KNOWS
+        its keys spread over every bucket (uniform hash keys, e.g. an
+        LSH index), where the prune job can never pay for itself.
 
-        _touched (internal, r17): a caller that already collected the
-        batch's bucket set in its own bounded job (merge_upsert)
-        passes it here, skipping this upsert's probe job — and, on
-        files_per_bucket=1 tables, the batch persist whose only
-        second consumer that job was."""
+        One shuffle: the bucket is a pure function of the key, so the
+        state+batch union is repartitioned once by bucket (by range
+        on (bucket, key) when files_per_bucket > 1) and resolved by a
+        window over (bucket, key) that this partitioning already
+        satisfies — the same exchange lays out the bucket files."""
+        self._write_batch(df, prune=prune, order_by=order_by)
+
+    def _write_batch(
+        self,
+        df: DataFrame,
+        *,
+        prune: bool = True,
+        order_by: str | list[str] | None = None,
+        combine: dict[str, str] | None = None,
+    ) -> None:
+        """The write path shared by upsert (combine=None: last-write-
+        wins window) and merge_upsert (combine rules: one aggregation
+        per (bucket, key)). Checks the batch, probes its touched
+        buckets, reads the touched state once, resolves state+batch
+        in one exchange, and commits the staged version."""
         if self.key not in df.columns:
             raise ValueError(f"key {self.key!r} not in columns {df.columns}")
         claimed = [
@@ -1090,6 +1177,7 @@ class NdbTable:
                 f"names: {_GEN}/{_BUCKET}/__rn/__slot/__old_*), got "
                 f"{df.columns}"
             )
+        self._release_probe()
         owns_lock = self._acquire_writer_lock()
         batch_persisted = False
         batch: DataFrame = df
@@ -1161,176 +1249,119 @@ class NdbTable:
             batch = df.withColumn(_GEN, F.lit(gen).cast("long")).withColumn(
                 _BUCKET, self._bucket_expr()
             )
-            batch_rng: dict | None = None
-            if prune and _touched is not None:
-                # r17 (verdict item 7): the caller already collected the
-                # batch's bucket set in its own bounded aggregation —
-                # skip this upsert's probe job. On files_per_bucket=1
-                # tables the write below is then the batch lineage's
-                # single evaluation, so the persist goes too; on
-                # files_per_bucket>1 the range probe still reads the
-                # batch, so the persist stays.
-                touched: list[int] | None = sorted(int(t) for t in _touched)
-                if self.files_per_bucket > 1:
-                    batch = batch.persist()
-                    batch_persisted = True
-            elif prune:
-                # persisted: the batch lineage feeds BOTH the
-                # touched-set probe and the merged write below —
-                # without this an expensive upstream transform would
-                # evaluate twice per upsert (review finding r9)
+            rng: dict = {}
+            if prune:
+                # persisted: the batch lineage feeds BOTH the probe and
+                # the merged write below — without this an expensive
+                # upstream transform would evaluate twice per write
+                # (review finding r9)
                 batch = batch.persist()
                 batch_persisted = True
-                if self.files_per_bucket > 1 and self._range_safe_key_type():
-                    # r17 (verdict item 7): ONE bounded aggregation
-                    # serves BOTH driver edges of the intra-bucket
-                    # pruned path — the touched-bucket set AND the
-                    # per-bucket key ranges _split_touched_files
-                    # previously collected in a second job. Either way
-                    # at most n_buckets rows cross the driver edge.
-                    rng_rows = (
-                        batch.groupBy(_BUCKET)
-                        .agg(
-                            F.min(self.key).alias("lo"),
-                            F.max(self.key).alias("hi"),
-                        )
-                        .collect()
-                    )
-                    touched = sorted(int(r[0]) for r in rng_rows)
-                    batch_rng = {int(r[0]): (r[1], r[2]) for r in rng_rows}
-                else:
-                    # bounded by n_buckets values — the prune driver edge
-                    touched = sorted(
-                        r[0] for r in batch.select(_BUCKET).distinct().collect()
-                    )
+                touched, rng = self._probe_batch(batch, dup_check=combine is not None)
             else:
                 touched = None  # full merge-rewrite; nothing links
 
             bucket_dirs = self._bucket_dirs(current) if current is not None else {}
             legacy = current is not None and not bucket_dirs
             carry_files: list[str] = []  # intra-bucket carryover links
-            merged: DataFrame | None
-            if current is None:
-                merged = batch
-            elif touched is None:
-                # prune=False: read the whole state, rewrite every bucket
-                state = self._reader().parquet(current)
+            state: DataFrame | None = None
+            if current is None or touched == []:
+                pass  # new table / empty batch: no state to merge
+            elif touched is None or legacy:
+                # prune=False, or the flat pre-bucket layout (an empty
+                # first write, or a table from before bucketing): read
+                # the whole state and rewrite every bucket — the
+                # rewrite migrates a flat state into the bucket layout,
+                # and nothing may link
+                state = self._read_version(current)
                 if _BUCKET not in state.columns:
                     state = state.withColumn(_BUCKET, self._bucket_expr())
-                merged = state.unionByName(batch, allowMissingColumns=self.evolve_schema)
-            elif legacy and touched:
-                # flat pre-bucket layout (an empty first write, or a table
-                # from before bucketing): full rewrite migrates it into
-                # the bucket layout — nothing can link
-                state = self._reader().parquet(current)
-                if _BUCKET not in state.columns:
-                    state = state.withColumn(_BUCKET, self._bucket_expr())
-                merged = state.unionByName(batch, allowMissingColumns=self.evolve_schema)
                 touched = None
-            elif touched:
-                if self.files_per_bucket > 1 and bucket_dirs:
-                    # intra-bucket file pruning: read only the touched
-                    # buckets' files whose key range intersects the
-                    # batch; the rest hardlink forward below
-                    read_files, carry_files = self._split_touched_files(
-                        batch, current, bucket_dirs, touched, rng=batch_rng
-                    )
-                    self.last_prune_stats = {
-                        "touched_buckets": len(touched),
-                        "files_read": len(read_files),
-                        "files_carried": len(carry_files),
-                        "bytes_read": sum(os.path.getsize(p) for p in read_files),
-                        "bytes_carried": sum(
-                            os.path.getsize(p) for p in carry_files
-                        ),
-                    }
-                    if read_files:
-                        state = self._reader().option(
-                            "basePath", current
-                        ).parquet(*read_files)
-                        merged = state.unionByName(batch, allowMissingColumns=self.evolve_schema)
-                    else:
-                        merged = batch  # all-new key ranges: nothing to merge
-                else:
-                    # partition-pruned read: the touched buckets' files
-                    state = self._reader().parquet(current).filter(
-                        F.col(_BUCKET).isin([int(t) for t in touched])
-                    )
-                    merged = state.unionByName(batch, allowMissingColumns=self.evolve_schema)
+            elif self.files_per_bucket > 1:
+                # intra-bucket file pruning: read only the touched
+                # buckets' files whose key range intersects the batch;
+                # the rest hardlink forward below
+                read_files, carry_files = self._split_touched_files(
+                    current, bucket_dirs, touched, rng
+                )
+                self.last_prune_stats = {
+                    "touched_buckets": len(touched),
+                    "files_read": len(read_files),
+                    "files_carried": len(carry_files),
+                    "bytes_read": sum(os.path.getsize(p) for p in read_files),
+                    "bytes_carried": sum(os.path.getsize(p) for p in carry_files),
+                }
+                if read_files:  # else all-new key ranges: nothing to merge
+                    state = self._read_version(current, read_files)
             else:
+                # partition-pruned read: the touched buckets' files
+                state = self._read_version(current).filter(
+                    F.col(_BUCKET).isin(touched)
+                )
+            if current is not None and touched == []:
                 merged = None  # empty batch: pure link-forward version
+            elif state is None:
+                merged = batch
+            else:
+                merged = state.unionByName(batch, allowMissingColumns=self.evolve_schema)
 
             version = f"v{gen}"
             # build the full version in a private staging dir; the
             # atomic rename in _commit_version publishes it (see the
             # module docstring's commit protocol)
             out_dir = self._staging_dir(gen)
+            resolved: DataFrame | None = None
+            partitioned = False
             if merged is None:
                 os.makedirs(out_dir, exist_ok=True)
             else:
-                if order_by is None:
-                    others = [c for c in df.columns if c != self.key]
-                    tie = (
-                        [F.struct(*[F.col(c) for c in others]).alias("__tie")]
-                        if others
-                        else []
+                n_parts = max(len(touched) if touched else self.n_buckets, 1)
+                if self.files_per_bucket > 1:
+                    # key-RANGE files inside each bucket, sorted by key
+                    # within each file: tight row-group min/max stats
+                    # (predicate scans skip row groups) and the footer
+                    # ranges _split_touched_files prunes on next
+                    # upsert. A range partition straddling a bucket
+                    # boundary just writes one small file into each
+                    # side — correctness is unaffected.
+                    laid = merged.repartitionByRange(
+                        n_parts * self.files_per_bucket,
+                        F.col(_BUCKET),
+                        F.col(self.key),
                     )
                 else:
-                    cols = [order_by] if isinstance(order_by, str) else list(order_by)
-                    tie = [F.col(c) for c in cols]
-                w = Window.partitionBy(self.key).orderBy(
-                    F.desc(_GEN), *[F.desc(t) for t in tie]
-                )
-                resolved = (
-                    merged.withColumn("__rn", F.row_number().over(w))
-                    .filter(F.col("__rn") == 1)
-                    .drop("__rn")
-                )
-                if touched == []:
-                    # first write with an empty batch: a partitioned write
-                    # of zero rows leaves no readable footer, so write one
-                    # flat schema-carrying file; the first real upsert
-                    # migrates it to the bucket layout (legacy branch)
-                    resolved.coalesce(1).write.mode("overwrite").parquet(out_dir)
+                    laid = merged.repartition(n_parts, F.col(_BUCKET))
+                if combine is None:
+                    resolved = self._last_write_wins(laid, df, order_by)
                 else:
-                    n_parts = len(touched) if touched else self.n_buckets
-                    if self.files_per_bucket > 1:
-                        # key-RANGE files inside each bucket, sorted by
-                        # key within each file: tight row-group min/max
-                        # stats (predicate scans skip row groups) and
-                        # the footer ranges _split_touched_files prunes
-                        # on next upsert. A range partition straddling
-                        # a bucket boundary just writes one small file
-                        # into each side — correctness is unaffected.
-                        shaped = resolved.repartitionByRange(
-                            max(n_parts, 1) * self.files_per_bucket,
-                            F.col(_BUCKET),
-                            F.col(self.key),
-                        ).sortWithinPartitions(_BUCKET, self.key)
-                    else:
-                        shaped = resolved.repartition(
-                            max(n_parts, 1), F.col(_BUCKET)
-                        )
+                    resolved = self._combine(laid, df, combine)
+                if touched != []:
                     (
-                        shaped.write.partitionBy(_BUCKET)
+                        resolved.sortWithinPartitions(_BUCKET, self.key)
+                        .write.partitionBy(_BUCKET)
                         .mode("overwrite")
                         .parquet(out_dir)
                     )
-                    if not self._bucket_dirs(out_dir):
-                        # zero rows materialized (prune=False on an empty
-                        # batch creating a table): a partitioned write of
-                        # nothing leaves no readable footer — write the
-                        # flat schema-carrying file instead
-                        resolved.coalesce(1).write.mode("overwrite").parquet(out_dir)
+                    partitioned = bool(self._bucket_dirs(out_dir))
+                if not partitioned:
+                    # first write with an empty batch (or prune=False on
+                    # an empty batch creating a table): a partitioned
+                    # write of zero rows leaves no readable footer, so
+                    # write one flat schema-carrying file; the first
+                    # real upsert migrates it to the bucket layout
+                    # (legacy branch)
+                    resolved.coalesce(1).write.mode("overwrite").parquet(out_dir)
             # hardlink everything the batch did not touch from the
             # previous version into the new one — byte-identical carryover.
             # touched=None means EVERYTHING was rewritten (prune=False or
             # legacy migration): linking then would merge stale files into
             # freshly-written bucket dirs, so nothing may link.
+            carried = False
             if current is not None and touched is not None:
                 if legacy:
-                    if merged is None:  # empty batch on a flat state
-                        _link_tree(current, out_dir)
+                    # empty batch on a flat state (touched == [])
+                    _link_tree(current, out_dir)
+                    carried = True
                 else:
                     keep = set(touched)
                     for bval, name in bucket_dirs.items():
@@ -1338,6 +1369,7 @@ class NdbTable:
                             _link_tree(
                                 os.path.join(current, name), os.path.join(out_dir, name)
                             )
+                            carried = True
                     # intra-bucket carryover: files inside TOUCHED
                     # buckets whose key range the batch provably
                     # missed (files_per_bucket > 1 path) — hardlinked
@@ -1351,7 +1383,14 @@ class NdbTable:
                             os.link(src, dst)
                         except OSError:
                             shutil.copy2(src, dst)
+                        carried = True
             self._write_manifest(out_dir, current)
+            self._write_schema(
+                out_dir,
+                None if new_evolved else self._version_schema(
+                    resolved, partitioned, current, carried
+                ),
+            )
             if new_evolved and not self._evolved:
                 # persist the MONOTONE evolved flag BEFORE the commit
                 # (review finding): a crash between commit and meta
@@ -1379,6 +1418,129 @@ class NdbTable:
                 self._release_writer_lock()
             if batch_persisted:
                 batch.unpersist()
+
+    def _probe_batch(self, batch: DataFrame, *, dup_check: bool) -> tuple[list[int], dict]:
+        """ONE bounded aggregation over the stamped batch (at most
+        n_buckets rows cross the driver edge) -> (touched buckets,
+        per-bucket key ranges). The ranges are taken only where the
+        intra-bucket file prune uses them (files_per_bucket > 1 and a
+        range-safe key type). dup_check (merge_upsert) first groups
+        to (bucket, key) counts and raises on any key seen twice —
+        the combine rules are defined for one batch row per key. Its
+        two grouping levels share one exchange on the bucket: a valid
+        batch holds one row per key, so a map-side (bucket, key)
+        partial would shrink nothing."""
+        want_rng = self.files_per_bucket > 1 and self._range_safe_key_type()
+        keyed = batch
+        aggs = []
+        if dup_check:
+            keyed = (
+                batch.repartition(_BUCKET)
+                .groupBy(_BUCKET, self.key)
+                .agg(F.count(F.lit(1)).alias("__c"))
+            )
+            aggs.append(F.max("__c").alias("__mx"))
+        if want_rng:
+            aggs += [F.min(self.key).alias("lo"), F.max(self.key).alias("hi")]
+        if aggs:
+            rows = keyed.groupBy(_BUCKET).agg(*aggs).collect()
+        else:
+            rows = keyed.select(_BUCKET).distinct().collect()
+        if dup_check and any(r["__mx"] > 1 for r in rows):
+            raise ValueError(
+                "merge_upsert batch holds duplicate keys — pre-aggregate "
+                "the batch (one row per key) so the combine rules are "
+                "well-defined"
+            )
+        touched = sorted(int(r[0]) for r in rows)
+        rng = {int(r[0]): (r["lo"], r["hi"]) for r in rows} if want_rng else {}
+        return touched, rng
+
+    def _last_write_wins(
+        self, merged: DataFrame, df: DataFrame, order_by: str | list[str] | None
+    ) -> DataFrame:
+        """Per key keep the newest generation's row; within the batch
+        `order_by` desc (default: struct-max over the non-key
+        columns) breaks ties. The window partitions by (bucket, key):
+        a bucket-partitioned input already satisfies it, so the
+        window adds no exchange."""
+        if order_by is None:
+            others = [c for c in df.columns if c != self.key]
+            tie = [F.struct(*[F.col(c) for c in others])] if others else []
+        else:
+            cols = [order_by] if isinstance(order_by, str) else list(order_by)
+            tie = [F.col(c) for c in cols]
+        w = Window.partitionBy(_BUCKET, self.key).orderBy(
+            F.desc(_GEN), *[F.desc(t) for t in tie]
+        )
+        return (
+            merged.withColumn("__rn", F.row_number().over(w))
+            .filter(F.col("__rn") == 1)
+            .drop("__rn")
+        )
+
+    def _combine(self, merged: DataFrame, df: DataFrame, combine: dict[str, str]) -> DataFrame:
+        """merge_upsert's resolution: one aggregation per (bucket, key)
+        over the stored row (if any) and the batch row (at most one —
+        the probe's dup check), with the batch at the newest
+        generation. Rules: sum/min/max aggregate (NULL-skipping, so
+        NULL is each one's identity); last/first take the non-NULL
+        value of the newest/oldest generation. A stored-only column
+        (evolved table) takes the newest row's value, NULL for every
+        key the batch carries — what a row replaced by the batch row
+        holds. Results cast back to the batch schema (the key_type
+        pinning precedent: decimal sums cannot widen the stored
+        schema across merges). Grouped by (bucket, key), so the
+        bucket-partitioned input needs no further exchange."""
+        gen = F.col(_GEN)
+        aggs = []
+        for c in merged.columns:
+            if c in (self.key, _BUCKET):
+                continue
+            if c == _GEN:
+                agg = F.max(gen)
+            elif c not in df.columns:
+                agg = F.max_by(c, gen)
+            else:
+                rule = combine.get(c, "last")
+                col = F.col(c)
+                present = F.when(col.isNotNull(), gen)
+                if rule == "sum":
+                    agg = F.sum(col)
+                elif rule == "min":
+                    agg = F.min(col)
+                elif rule == "max":
+                    agg = F.max(col)
+                elif rule == "first":
+                    agg = F.min_by(col, present)
+                else:  # last
+                    agg = F.max_by(col, present)
+                agg = agg.cast(df.schema[c].dataType)
+            aggs.append(agg.alias(c))
+        return merged.groupBy(_BUCKET, self.key).agg(*aggs).select(*merged.columns)
+
+    def _version_schema(
+        self, resolved: DataFrame | None, partitioned: bool,
+        prev_dir: str | None, carried: bool,
+    ) -> dict | None:
+        """The schema record for a staged version: the read schema of
+        the files written from `resolved` — every field nullable and,
+        on the bucket layout, the partition column last, typed int:
+        what parquet discovery yields — or the previous record for a
+        pure link-forward version (resolved None). A version that
+        also carries files from the previous one is recorded only
+        when the previous record matches — a carried file of unknown
+        or different schema leaves the version to inference."""
+        prev = self._load_schema(prev_dir) if carried else None
+        if resolved is None:
+            return prev
+        fields = resolved.schema.jsonValue()["fields"]
+        if partitioned:
+            fields = [f for f in fields if f["name"] != _BUCKET] + [
+                {"name": _BUCKET, "type": "integer", "nullable": True, "metadata": {}}
+            ]
+        schema = _nullable_type({"type": "struct", "fields": fields})
+        return schema if not carried or schema == prev else None
 
     def _acquire_writer_lock(self) -> bool:
         """Take the advisory writer lock. Returns True when THIS call
@@ -1694,6 +1856,7 @@ class NdbTable:
         compact racing a cross-process upsert could flip the pointer
         over the other writer's version and GC it — the lost-update
         case the guard exists to prevent)."""
+        self._release_probe()
         owns_lock = self._acquire_writer_lock()
         try:
             return self._compact_locked(buckets)
@@ -1744,9 +1907,7 @@ class NdbTable:
         gen = 0 if prev_gen is None else prev_gen + 1
         version = f"v{gen}"
         out_dir = self._staging_dir(gen)  # stage-then-commit protocol
-        state = self._reader().parquet(current).filter(
-            F.col(_BUCKET).isin(sel)
-        )
+        state = self._read_version(current).filter(F.col(_BUCKET).isin(sel))
         if self.files_per_bucket > 1:
             # DETERMINISTIC slot assignment: ntile splits each bucket's
             # key order into exactly files_per_bucket contiguous range
@@ -1778,12 +1939,20 @@ class NdbTable:
             shaped = state.repartition(len(sel), F.col(_BUCKET))
         shaped.write.partitionBy(_BUCKET).mode("overwrite").parquet(out_dir)
         keep = set(sel)
+        carried = False
         for bval, name in bucket_dirs.items():
             if bval not in keep:
                 _link_tree(
                     os.path.join(current, name), os.path.join(out_dir, name)
                 )
+                carried = True
         self._write_manifest(out_dir, current)
+        self._write_schema(
+            out_dir,
+            None if self._evolved else self._version_schema(
+                shaped, True, current, carried
+            ),
+        )
         self._commit_version(out_dir, gen)
         self._write_meta()
         self._flip_pointer(version)
@@ -1808,11 +1977,15 @@ class NdbTable:
         construction; duplicated keys raise — silently combining
         within a batch would hide a missing groupBy upstream).
 
-        Cost shape: one bucket-pruned read of the touched buckets'
-        current rows (the same prune the plain upsert pays), one
-        keyed left-join of batch-vs-state, then the standard pruned
-        upsert write — O(state*b/n + batch), never the accumulated
-        history.
+        Cost shape: one bounded probe job over the batch (the
+        duplicate-key check, the touched buckets and, on
+        files_per_bucket>1 tables, their key ranges), then the upsert
+        write path with the combine rules in place of the last-write-
+        wins window: the touched buckets' stored rows are read ONCE,
+        unioned with the batch, and folded by one aggregation per
+        (bucket, key) inside the single bucket exchange that also
+        lays out the files — no join, O(state*b/n + batch), never the
+        accumulated history.
 
         RETRY CONTRACT under additive rules (ADVICE r14): an
         NdbWriteConflict raised by the post-rename stale-publish
@@ -1845,106 +2018,7 @@ class NdbTable:
                 f"combine names columns not in the batch: {missing} "
                 f"(batch columns: {df.columns})"
             )
-        # persisted: the batch lineage otherwise evaluates twice (the
-        # fused dup/touched probe and the joined upsert write) — the
-        # r9 double-evaluation finding, one call deeper (review
-        # finding). df is rebound below; `src` keeps the unpersist
-        # handle.
-        df = df.persist()
-        src = df
-        try:
-            # r17 (verdict item 7): ONE bounded aggregation replaces
-            # the duplicate-key probe job AND the touched-bucket
-            # collect job — group to (bucket, key) counts, reduce to a
-            # per-bucket max, collect n_buckets rows: any max > 1 is
-            # the old dup predicate exactly, and the bucket set feeds
-            # the state prune here and the nested upsert via _touched
-            # (skipping its probe job too). Three probe jobs per
-            # merge_upsert become one.
-            stats = (
-                df.withColumn(_BUCKET, self._bucket_expr())
-                .groupBy(_BUCKET, self.key)
-                .agg(F.count(F.lit(1)).alias("__c"))
-                .groupBy(_BUCKET)
-                .agg(F.max("__c").alias("__mx"))
-                .collect()
-            )
-            if any(r["__mx"] > 1 for r in stats):
-                raise ValueError(
-                    "merge_upsert batch holds duplicate keys — pre-aggregate "
-                    "the batch (one row per key) so the combine rules are "
-                    "well-defined"
-                )
-            touched = [r[0] for r in stats]
-        except Exception:
-            src.unpersist()
-            raise
-        # the lock spans READ + combine + write: an interleaved foreign
-        # writer between the state read and the upsert would be exactly
-        # the lost update the guard exists to prevent (the nested
-        # upsert's acquire passes through reentrantly)
-        owns_lock = self._acquire_writer_lock()
-        try:
-            current = self._current_dir()
-            if current is not None:
-                state = self._reader().parquet(current)
-                if _BUCKET in state.columns:
-                    state = state.filter(
-                        F.col(_BUCKET).isin([int(t) for t in touched])
-                    )
-                stored_cols = set(state.columns)
-                old = state.drop(_GEN, _BUCKET).select(
-                    F.col(self.key),
-                    *[
-                        (
-                            F.col(c)
-                            if c in stored_cols
-                            # evolved table: a batch column the stored
-                            # state has never seen folds against NULL
-                            else F.lit(None).cast(df.schema[c].dataType)
-                        ).alias(f"__old_{c}")
-                        for c in df.columns
-                        if c != self.key
-                    ],
-                )
-                merged_cols = [F.col(self.key)]
-                for c in df.columns:
-                    if c == self.key:
-                        continue
-                    rule = combine.get(c, "last")
-                    new, prev = F.col(c), F.col(f"__old_{c}")
-                    if rule == "sum":
-                        # NULL is the additive identity; both-NULL stays
-                        # NULL (type-preserving: no lit(0) cast needed)
-                        expr = (
-                            F.when(new.isNull(), prev)
-                            .when(prev.isNull(), new)
-                            .otherwise(new + prev)
-                        )
-                    elif rule == "min":
-                        expr = F.least(new, prev)
-                    elif rule == "max":
-                        expr = F.greatest(new, prev)
-                    elif rule == "first":
-                        expr = F.coalesce(prev, new)
-                    else:  # last
-                        expr = F.coalesce(new, prev)
-                    # the batch schema is the contract (the key_type
-                    # pinning precedent): combine results cast back to
-                    # it, so e.g. decimal addition's widened precision
-                    # cannot drift the stored schema across merges
-                    merged_cols.append(
-                        expr.cast(df.schema[c].dataType).alias(c)
-                    )
-                df = df.join(old, self.key, "left").select(*merged_cols)
-            # the joined frame carries the batch's exact key set, so
-            # its bucket set is `touched` — the nested upsert skips its
-            # own probe job (r17, see the stats aggregation above)
-            self.upsert(df, _touched=touched)
-        finally:
-            src.unpersist()
-            if owns_lock:
-                self._release_writer_lock()
+        self._write_batch(df, combine=combine)
 
     def replay(self, *, as_of: int | None = None) -> DataFrame:
         """The table as a source (reference ndb-without-input mode:
@@ -1969,11 +2043,17 @@ class NdbTable:
                     f"(retained: {self.versions()}; raise keep_versions "
                     "to widen the window)"
                 )
-            return self._reader().parquet(vdir).drop(_GEN, _BUCKET)
+            return self._read_version(vdir).drop(_GEN, _BUCKET)
         state = self._state()
         if state is None:
             raise ValueError(f"ndb table at {self.path} is empty")
         return state.drop(_GEN, _BUCKET)
+
+    def _release_probe(self) -> None:
+        """Unpersist the probe the last pruned lookup() cached."""
+        held, self._held_probe = self._held_probe, None
+        if held is not None:
+            held.unpersist()
 
     def lookup(
         self,
@@ -1995,12 +2075,20 @@ class NdbTable:
         already last-write-wins resolved per key within their bucket,
         so dropping whole bucket partitions cannot change the result
         (unmatched probe rows still emit NULLs under 'left'). Cost:
-        ONE probe-side distinct over the computed bucket id — map-side
-        combinable to <= n_buckets rows, a bounded driver edge by
-        construction. At 100 TB this is the difference between a
-        point-lookup enrich reading b/n of the table and reading all
-        of it — the lookup analogue of upsert's partition pruning.
-        The SAME probe pass also takes the probe's global [min, max]
+        one prune pass over the probe — the distinct computed bucket
+        ids, map-side combinable to <= n_buckets rows, a bounded
+        driver edge by construction. At 100 TB this is the difference
+        between a point-lookup enrich reading b/n of the table and
+        reading all of it — the lookup analogue of upsert's partition
+        pruning. The probe is persisted before that pass (unless the
+        caller already cached it), so the returned join reads the
+        cached rows instead of evaluating the probe a second time: a
+        probe built from local rows is a Python-backed RDD whose
+        every evaluation pays a Python worker round. The table holds
+        at most that one probe and releases it at its next lookup or
+        write, so nothing persisted accumulates across calls; a join
+        run after the release evaluates the probe again, correctly.
+        The same prune pass also takes the probe's global [min, max]
         key range, and the table filter adds key BETWEEN lo AND hi —
         keys outside the probe's range cannot match either, and the
         between pushes down to the parquet scan (PushedFilters), so
@@ -2012,7 +2100,8 @@ class NdbTable:
         when the probe is itself table-sized (the pruning pass then
         costs more than it saves). last_lookup_stats records the
         selection."""
-        self.last_lookup_stats: dict = {}
+        self.last_lookup_stats = {}
+        self._release_probe()
         # left/inner/semi: pruned table rows can't match any probe
         # key. anti is safe for the same reason — removing table rows
         # outside the probe's buckets cannot change which probe rows
@@ -2046,8 +2135,12 @@ class NdbTable:
             and probe_kt is not None
             and probe_kt == stored_kt
         ):
-            # ONE probe pass: distinct bucket ids (<= n_buckets via
-            # map-side combine) + the global key range, one driver row
+            if other.storageLevel == StorageLevel.NONE:
+                other = other.persist()
+                self._held_probe = other
+            # the prune pass: distinct bucket ids (<= n_buckets via
+            # map-side combine) + the global key range, one driver row;
+            # it also fills the probe cache the returned join reads
             sel = other.agg(
                 F.collect_set(self._bucket_expr()).alias("bs"),
                 F.min(self.key).alias("lo"),

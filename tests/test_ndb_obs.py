@@ -738,8 +738,18 @@ def test_ndb_range_pruned_replay_prunes_within_buckets(spark):
 def test_ndb_merge_upsert_rules(spark, tmpdir):
     """merge_upsert: per-column combine rules (sum/min/max/last/first)
     fold a pre-aggregated batch into the stored row per key — the
-    MERGE-with-aggregation primitive behind continuous aggregates."""
-    t = NdbTable(spark, os.path.join(tmpdir, "kv"), key="k", n_buckets=2)
+    MERGE-with-aggregation primitive behind continuous aggregates —
+    on both the one-file and the key-range-file bucket layouts."""
+    for fpb in (1, 2):
+        _merge_upsert_rules_case(
+            spark, os.path.join(tmpdir, f"kv{fpb}"), files_per_bucket=fpb
+        )
+
+
+def _merge_upsert_rules_case(spark, path, files_per_bucket):
+    t = NdbTable(
+        spark, path, key="k", n_buckets=2, files_per_bucket=files_per_bucket
+    )
     schema = "k bigint, n bigint, lo bigint, hi bigint, tag string, origin string"
     t.merge_upsert(
         spark.createDataFrame([(1, 10, 5, 5, "a", "first")], schema),
@@ -785,24 +795,28 @@ def test_ndb_merge_upsert_matches_batch_groupby(spark, tmpdir):
 
     rows = [(i % 7, 1, decimal.Decimal(f"{i}.25")) for i in range(40)]
     schema = "k bigint, n bigint, v decimal(18,6)"
-    t = NdbTable(spark, os.path.join(tmpdir, "kv"), key="k", n_buckets=4)
-    for lo, hi in ((0, 13), (13, 14), (14, 40)):  # lopsided splits
-        batch = (
-            spark.createDataFrame(rows[lo:hi], schema)
-            .groupBy("k")
-            .agg(
-                F.sum("n").alias("n"),
-                F.sum("v").cast("decimal(18,6)").alias("v"),
-            )
-        )
-        t.merge_upsert(batch, combine={"n": "sum", "v": "sum"})
-    got = {r.k: (r.n, r.v) for r in t.replay().collect()}
     expect = {}
     for k, n, v in rows:
         pn, pv = expect.get(k, (0, decimal.Decimal(0)))
         expect[k] = (pn + n, pv + v)
-    assert got == expect
-    assert dict(t.replay().dtypes)["v"] == "decimal(18,6)"
+    for fpb in (1, 2):  # one file / key-range files per bucket
+        t = NdbTable(
+            spark, os.path.join(tmpdir, f"kv{fpb}"), key="k", n_buckets=4,
+            files_per_bucket=fpb,
+        )
+        for lo, hi in ((0, 13), (13, 14), (14, 40)):  # lopsided splits
+            batch = (
+                spark.createDataFrame(rows[lo:hi], schema)
+                .groupBy("k")
+                .agg(
+                    F.sum("n").alias("n"),
+                    F.sum("v").cast("decimal(18,6)").alias("v"),
+                )
+            )
+            t.merge_upsert(batch, combine={"n": "sum", "v": "sum"})
+        got = {r.k: (r.n, r.v) for r in t.replay().collect()}
+        assert got == expect, fpb
+        assert dict(t.replay().dtypes)["v"] == "decimal(18,6)"
 
 
 def test_ndb_writer_lock_blocks_live_foreign_owner(spark, tmpdir):
